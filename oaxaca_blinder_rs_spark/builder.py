@@ -23,6 +23,14 @@ At 100 TB: the design columns are pure Catalyst expressions over the scan
 partial/final with O(k^2) state, and nothing larger than k x k reaches the
 driver. Residuals stay distributed; they are only collect()ed beneath a size
 guard.
+
+A pandas frame runs in-process instead: the same data prep on pandas, then
+ONE call of the fused bootstrap kernel (the body of the Spark fast path's
+mapInPandas pass) yields the point statistics and every replicate; all
+arithmetic after the statistics is shared with the Spark path. The local
+bootstrap always draws the splitmix64 ``poisson_fast`` stream keyed by the
+row id (``id_col``, else the row position after cleaning); the bootstrap
+method and compute engine settings apply to Spark input only.
 """
 
 from __future__ import annotations
@@ -32,6 +40,7 @@ import sys
 from dataclasses import dataclass, field
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -47,6 +56,7 @@ from .operators import decomposition as dec
 from .operators.bootstrap import (
     bootstrap_group_stats,
     bootstrap_group_stats_fast,
+    bootstrap_group_stats_local,
     bootstrap_stats,
 )
 from .results import ComponentResult, DecompositionDetail, OaxacaResults, TwoFoldResults
@@ -81,7 +91,7 @@ class OaxacaBuilder:
     coefficients=GroupA (builder.rs:117-129).
     """
 
-    def __init__(self, dataframe: DataFrame, outcome: str, group: str, reference_group: str):
+    def __init__(self, dataframe: DataFrame | pd.DataFrame, outcome: str, group: str, reference_group: str):
         self._df = dataframe
         self._outcome = outcome
         self._group = group
@@ -204,8 +214,11 @@ class OaxacaBuilder:
         category_counts: dict[str, int] = {}
         base_categories: dict[str, str] = {}
         for var in self._categorical_predictors:
-            levels = [r[0] for r in df.select(var).distinct().orderBy(var).collect()]
-            levels = [lv for lv in levels if lv is not None]
+            if isinstance(df, pd.DataFrame):
+                levels = sorted(df[var].dropna().unique())
+            else:
+                levels = [r[0] for r in df.select(var).distinct().orderBy(var).collect()]
+                levels = [lv for lv in levels if lv is not None]
             if not levels:
                 raise InsufficientData(
                     f"Categorical predictor '{var}' has no non-null levels"
@@ -217,13 +230,16 @@ class OaxacaBuilder:
         return dummy_names, category_counts, base_categories
 
     def _group_names(self, df: DataFrame) -> tuple[str, str]:
-        """builder.rs:61-102: B = reference group; A = first sorted distinct != B."""
         uniques = [r[0] for r in df.select(self._group).distinct().orderBy(self._group).collect()]
-        uniques = [u for u in uniques if u is not None]
-        if len(uniques) < 2:
+        return self._pick_groups(u for u in uniques if u is not None)
+
+    def _pick_groups(self, levels) -> tuple[str, str]:
+        """builder.rs:61-102: B = reference group; A = first sorted distinct != B."""
+        levels = sorted(levels)
+        if len(levels) < 2:
             raise InvalidGroupVariable("Not enough groups for comparison")
         group_b = self._reference_group
-        group_a = uniques[0] if uniques[0] != group_b else uniques[1]
+        group_a = levels[0] if levels[0] != group_b else levels[1]
         return group_a, group_b
 
     def _design(self, df: DataFrame, dummy_names: list[str]) -> tuple[DataFrame, list[str]]:
@@ -233,6 +249,9 @@ class OaxacaBuilder:
         construction/analysis time is part of the latency budget for small
         interactive queries.
         """
+        xcols = [INTERCEPT] + list(self._predictors) + dummy_names
+        if isinstance(df, pd.DataFrame):
+            return self._design_local(df, dummy_names), xcols
         new_cols = {INTERCEPT: F.lit(1.0)}
         for name in dummy_names:
             var, _, level = self._split_dummy(name)
@@ -242,9 +261,21 @@ class OaxacaBuilder:
         new_cols[self._outcome] = F.col(self._outcome).cast("double")
         if self._weights_col:
             new_cols[self._weights_col] = F.col(self._weights_col).cast("double")
-        out = df.withColumns(new_cols)
-        xcols = [INTERCEPT] + list(self._predictors) + dummy_names
-        return out, xcols
+        return df.withColumns(new_cols), xcols
+
+    def _design_local(self, df: pd.DataFrame, dummy_names: list[str]) -> pd.DataFrame:
+        """pandas twin of ``_design``. Dummies compare the level's text (the
+        suffix of its dummy name) so numeric category codes match too."""
+        new_cols = {INTERCEPT: np.ones(len(df))}
+        as_text = {}
+        for name in dummy_names:
+            var, _, level = self._split_dummy(name)
+            if var not in as_text:
+                as_text[var] = df[var].astype(str)
+            new_cols[name] = (as_text[var] == level).to_numpy(dtype=np.float64)
+        for c in list(self._predictors) + [self._outcome] + ([self._weights_col] if self._weights_col else []):
+            new_cols[c] = df[c].to_numpy(dtype=np.float64)
+        return df.assign(**new_cols)
 
     def _split_dummy(self, dummy_name: str) -> tuple[str, str, str]:
         for var in self._categorical_predictors:
@@ -254,6 +285,9 @@ class OaxacaBuilder:
         raise OaxacaError(f"Unknown dummy column: {dummy_name}")
 
     def _ensure_row_id(self, df: DataFrame) -> DataFrame:
+        if isinstance(df, pd.DataFrame):
+            ids = df[self._id_col].to_numpy(dtype=np.int64) if self._id_col else np.arange(len(df))
+            return df.assign(**{ROW_ID: ids})
         if self._id_col:
             return df.withColumn(ROW_ID, F.col(self._id_col).cast("long"))
         return df.withColumn(ROW_ID, F.monotonically_increasing_id())
@@ -370,6 +404,8 @@ class OaxacaBuilder:
     # -- main entry (builder.rs:786-951) ----------------------------------------
     def run(self) -> OaxacaResults:
         if self._selection_outcome is not None:
+            if isinstance(self._df, pd.DataFrame):
+                raise OaxacaError("heckman_selection needs a Spark DataFrame input")
             from .operators.heckman import run_heckman_oaxaca
 
             return run_heckman_oaxaca(self)
@@ -390,12 +426,26 @@ class OaxacaBuilder:
         # analysis is one data scan. (Replicate work for group levels
         # outside {A, B} is wasted; pre-filter the input when the group
         # column has many levels.)
-        fused = (
+        local = isinstance(design, pd.DataFrame)
+        fused = local or (
             self._engine == "pandas"
             and self._bootstrap_method in ("poisson_fast", "exact_fast", "auto")
         )
         rep_stats: dict = {}
-        if fused:
+        if local:
+            rep_stats = bootstrap_group_stats_local(
+                design,
+                xcols,
+                self._outcome,
+                self._group,
+                reps=self._bootstrap_reps,
+                seed=self._seed,
+                wcol=self._weights_col,
+                id_col=ROW_ID,
+                include_identity=True,
+            )
+            stats = rep_stats.pop(-1, {})
+        elif fused:
             all_stats = bootstrap_group_stats_fast(
                 design,
                 xcols,
@@ -417,11 +467,7 @@ class OaxacaBuilder:
                 design, xcols, self._outcome, group=self._group,
                 wcol=self._weights_col, engine=self._engine,
             )
-        levels = sorted(g for g in stats if g is not None)
-        if len(levels) < 2:
-            raise InvalidGroupVariable("Not enough groups for comparison")
-        group_b = self._reference_group
-        group_a = levels[0] if levels[0] != group_b else levels[1]
+        group_a, group_b = self._pick_groups(g for g in stats if g is not None)
         if group_a not in stats or group_b not in stats:
             raise InvalidGroupVariable("One group has no data")
         stats_a, stats_b = stats[group_a], stats[group_b]
@@ -534,31 +580,42 @@ class OaxacaBuilder:
         # Residuals stay DISTRIBUTED: build the group-B residual frame lazily
         # (y - X beta_B as a Catalyst expression — builder.rs:938 keeps a
         # Vec<f64>; at 100 TB that must not hit the driver). collect happens
-        # only on demand, guarded by RESIDUAL_COLLECT_LIMIT.
+        # only on demand, guarded by RESIDUAL_COLLECT_LIMIT. A pandas design
+        # gives a pandas residual frame, also built on first use.
         # The normalization shift is fitted-value-invariant, so using the
         # normalized beta_b gives identical residuals (normalization.rs:53-111).
         beta_b = [float(b) for b in point.beta_b]
         n_b = stats_b.n
 
-        def residuals_df_factory():
-            # deferred: ~20 py4j round-trips of plan building that would
-            # otherwise tax every fit's latency (profiled ~0.15 s at reps=1)
-            pred = F.lit(0.0)
-            for b, c in zip(beta_b, xcols):
-                pred = pred + F.col(c) * F.lit(b)
-            return design.filter(F.col(self._group) == F.lit(group_b)).select(
-                F.col(ROW_ID).alias("row_id"), (F.col(self._outcome) - pred).alias("residual")
-            )
+        if isinstance(design, pd.DataFrame):
+            def residuals_df_factory():
+                sub = design[design[self._group] == group_b]
+                resid = sub[self._outcome].to_numpy() - sub[xcols].to_numpy() @ np.asarray(beta_b)
+                return pd.DataFrame({"row_id": sub[ROW_ID].to_numpy(), "residual": resid})
 
-        def residual_supplier():
-            if n_b > RESIDUAL_COLLECT_LIMIT:
-                raise OaxacaError(
-                    f"Refusing to collect {n_b} residuals to the driver; use "
-                    "results.residuals_df (distributed) or the budget operator "
-                    "oaxaca_blinder_rs_spark.operators.budget.allocate_budget."
+            def residual_supplier():
+                frame = residuals_df_factory().sort_values("row_id", kind="stable")
+                return frame["row_id"].tolist(), frame["residual"].tolist()
+        else:
+            def residuals_df_factory():
+                # deferred: ~20 py4j round-trips of plan building that would
+                # otherwise tax every fit's latency (profiled ~0.15 s at reps=1)
+                pred = F.lit(0.0)
+                for b, c in zip(beta_b, xcols):
+                    pred = pred + F.col(c) * F.lit(b)
+                return design.filter(F.col(self._group) == F.lit(group_b)).select(
+                    F.col(ROW_ID).alias("row_id"), (F.col(self._outcome) - pred).alias("residual")
                 )
-            rows = residuals_df_factory().orderBy("row_id").collect()
-            return [int(r[0]) for r in rows], [float(r[1]) for r in rows]
+
+            def residual_supplier():
+                if n_b > RESIDUAL_COLLECT_LIMIT:
+                    raise OaxacaError(
+                        f"Refusing to collect {n_b} residuals to the driver; use "
+                        "results.residuals_df (distributed) or the budget operator "
+                        "oaxaca_blinder_rs_spark.operators.budget.allocate_budget."
+                    )
+                rows = residuals_df_factory().orderBy("row_id").collect()
+                return [int(r[0]) for r in rows], [float(r[1]) for r in rows]
 
         results = OaxacaResults(
             total_gap=point.total_gap,
@@ -586,17 +643,24 @@ class OaxacaBuilder:
         from .operators.rif import rif_expr_from_params, rif_group_params
 
         df = self._clean(self._df)
-        if self._engine == "pandas":
+        if isinstance(df, pd.DataFrame):
+            from .operators.rif import rif_params_from_pandas, rif_values_from_params
+
+            group_a, group_b = self._pick_groups(df[self._group].dropna().unique())
+            df = df[df[self._group].isin([group_a, group_b])]
+            y = df[self._outcome].to_numpy(dtype=np.float64)
+            g = df[self._group].to_numpy()
+            params = rif_params_from_pandas(
+                pd.DataFrame({self._group: g, "__y": y}), self._group, "__y", quantile
+            )
+            df_mod = df.assign(**{self._outcome: rif_values_from_params(params, y, g, quantile)})
+        elif self._engine == "pandas":
             # single pull: the (group, y) frame yields BOTH the group levels
             # (no distinct job) and the per-group RIF parameters
             from .operators.rif import rif_params_from_pandas
 
             pdf = df.select(self._group, F.col(self._outcome).cast("double").alias("__y")).toPandas()
-            levels = sorted(x for x in pdf[self._group].dropna().unique())
-            if len(levels) < 2:
-                raise InvalidGroupVariable("Not enough groups for comparison")
-            group_b = self._reference_group
-            group_a = levels[0] if levels[0] != group_b else levels[1]
+            group_a, group_b = self._pick_groups(pdf[self._group].dropna().unique())
             sub = pdf[pdf[self._group].isin([group_a, group_b])]
             params = rif_params_from_pandas(sub, self._group, "__y", quantile)
             df = df.filter(F.col(self._group).isin([group_a, group_b]))

@@ -27,6 +27,7 @@ __all__ = [
     "OlsFit",
     "gram_agg_exprs",
     "collect_group_stats",
+    "group_stats_local",
     "ols_from_stats",
     "pooled_stats",
     "stats_from_row",
@@ -190,39 +191,63 @@ def _collect_group_stats_pandas(
     group: str | None,
     wcol: str | None,
 ) -> dict[str, GroupStats] | GroupStats:
-    import pandas as pd
-
-    k = len(xcols)
     cols = ([group] if group else []) + [ycol] + xcols + ([wcol] if wcol else [])
-    proj = df.select(*cols)
 
     def compute(iterator):
-        acc: dict = {}
-        for pdf in iterator:
-            groups = pdf.groupby(group, sort=False) if group else [(None, pdf)]
-            for gval, sub in groups:
-                Xy = sub[[ycol] + xcols].to_numpy(dtype=np.float64)
-                w = sub[wcol].to_numpy(dtype=np.float64) if wcol else None
-                if w is None:
-                    G = Xy.T @ Xy
-                    s = Xy.sum(axis=0)
-                    wsum = float(len(sub))
-                else:
-                    G = (Xy * w[:, None]).T @ Xy
-                    s = (Xy * w[:, None]).sum(axis=0)
-                    wsum = float(w.sum())
-                v = np.concatenate([G.ravel(), s, [wsum, float(len(sub))]])
-                key = gval if gval is not None else "__all__"
-                if key in acc:
-                    acc[key] += v
-                else:
-                    acc[key] = v
-        yield pd.DataFrame(
-            [(kk, vv.tolist()) for kk, vv in acc.items()], columns=["grp", "stats"]
-        )
+        return group_stats_kernel(iterator, xcols, ycol, group, wcol)
 
-    pdf_all = proj.mapInPandas(compute, schema="grp string, stats array<double>").toPandas()
-    merged: dict[str, np.ndarray] = {}
+    pdf_all = df.select(*cols).mapInPandas(
+        compute, schema="grp string, stats array<double>"
+    ).toPandas()
+    return _reduce_group_stats(pdf_all, xcols, group)
+
+
+def group_stats_local(
+    pdf,
+    xcols: list[str],
+    ycol: str,
+    group: str | None = None,
+    wcol: str | None = None,
+) -> dict[object, GroupStats] | GroupStats:
+    """In-process twin of ``collect_group_stats(engine='pandas')``: the same
+    kernel on one pandas frame. Group keys keep the frame's own values."""
+    return _reduce_group_stats(next(group_stats_kernel(iter([pdf]), xcols, ycol, group, wcol)), xcols, group)
+
+
+def group_stats_kernel(iterator, xcols: list[str], ycol: str, group: str | None, wcol: str | None):
+    """Per-partition Gram GEMM: yields one (grp, stats) frame holding each
+    group's [y | X] cross-product, column sums, weight sum and row count.
+    The body of the ``mapInPandas`` pass and of the in-process path."""
+    import pandas as pd
+
+    acc: dict = {}
+    for pdf in iterator:
+        groups = pdf.groupby(group, sort=False) if group else [(None, pdf)]
+        for gval, sub in groups:
+            Xy = sub[[ycol] + xcols].to_numpy(dtype=np.float64)
+            w = sub[wcol].to_numpy(dtype=np.float64) if wcol else None
+            if w is None:
+                G = Xy.T @ Xy
+                s = Xy.sum(axis=0)
+                wsum = float(len(sub))
+            else:
+                G = (Xy * w[:, None]).T @ Xy
+                s = (Xy * w[:, None]).sum(axis=0)
+                wsum = float(w.sum())
+            v = np.concatenate([G.ravel(), s, [wsum, float(len(sub))]])
+            key = gval if gval is not None else "__all__"
+            if key in acc:
+                acc[key] += v
+            else:
+                acc[key] = v
+    yield pd.DataFrame(
+        [(kk, vv.tolist()) for kk, vv in acc.items()], columns=["grp", "stats"]
+    )
+
+
+def _reduce_group_stats(pdf_all, xcols: list[str], group: str | None):
+    k = len(xcols)
+    merged: dict = {}
     for gval, stats in zip(pdf_all["grp"], pdf_all["stats"]):
         arr = np.asarray(stats, dtype=np.float64)
         if gval in merged:
@@ -230,7 +255,7 @@ def _collect_group_stats_pandas(
         else:
             merged[gval] = arr.copy()
 
-    out: dict[str, GroupStats] = {}
+    out: dict = {}
     kk1 = k + 1
     for gval, v in merged.items():
         G = v[: kk1 * kk1].reshape(kk1, kk1)

@@ -7,8 +7,14 @@ tools with the same input schemas, JSON-RPC 2.0 over stdin/stdout
 (main.rs:254-520) — session handshake via Mcp-Session-Id header or
 sessionId query param, x-api-key / Bearer auth, per-minute rate limit,
 2 MiB body cap, CORS for 127.0.0.1. Dependency-free (stdlib json +
-http.server); each tool call parses the request's CSV bytes into a Spark
-frame and delegates to operators/engine_ops.
+http.server).
+
+Each tool call parses the request's CSV bytes into a pandas frame
+(``sources.csv.parse_csv_bytes``) and hands it to operators/engine_ops,
+which runs a pandas frame in-process with NumPy: a tool call starts no
+Spark job and never creates a Spark session. Spark DataFrame inputs to the
+same engine entry points (library callers, batch jobs) keep the Spark
+plans; ``McpServer.spark()`` still hands out the server's session for them.
 
     python -m oaxaca_blinder_rs_spark.mcp_server                 # stdio
     python -m oaxaca_blinder_rs_spark.mcp_server --transport sse \
@@ -168,9 +174,9 @@ class McpServer:
 
     # -- tool implementations ------------------------------------------------
     def _frame(self, args):
-        from .sources.csv import read_csv_bytes
+        from .sources.csv import parse_csv_bytes
 
-        return read_csv_bytes(self.spark(), args["csv_content"])
+        return parse_csv_bytes(args["csv_content"])
 
     def call_tool(self, name: str, args: dict):
         from .operators import engine_ops as eo
@@ -228,8 +234,8 @@ class McpServer:
             rows = eo.check_defensibility(
                 df, adj, outcome, group, ref, preds, cats,
                 overrides=overrides or None, id_col=rid,
-            ).collect()
-            return {"adjustments": [r.asDict() for r in rows]}
+            )
+            return {"adjustments": rows.to_dict("records")}
         if name == "generate_efficient_frontier":
             pts = eo.efficient_frontier(
                 df, outcome, group, ref, preds, cats,

@@ -46,6 +46,7 @@ __all__ = [
     "bootstrap_stats",
     "bootstrap_group_stats",
     "bootstrap_group_stats_fast",
+    "bootstrap_group_stats_local",
     "poisson_count_expr",
     "poisson_counts_np",
     "hash_uniform",
@@ -250,13 +251,6 @@ def bootstrap_group_stats_fast(
     bootstrap needs exactly ONE pass over the data (plus, for ``exact``, a
     per-group count job to size the pick streams).
     """
-    import numpy as np
-    import pandas as pd
-
-    k = len(xcols)
-    tri = [(i, j) for i in range(k) for j in range(i, k)]
-    L = len(tri) + 2 * k + 3  # xx, xsum, xy, yty, ysum, wsum
-    B = reps
     use_exact = method == "exact"
     if method not in ("poisson", "exact"):
         raise ValueError(f"unknown fast bootstrap method: {method}")
@@ -304,65 +298,124 @@ def bootstrap_group_stats_fast(
     out_schema = "rep long, grp string, stats array<double>"
 
     def compute(iterator):
-        by_group: dict[str, list] = {}
-        for pdf in iterator:
-            for gval, sub in pdf.groupby(group, sort=False):
-                by_group.setdefault(gval, []).append(sub)
-        rows_out = []
-        for gval, parts in by_group.items():
-            sub = pd.concat(parts, ignore_index=True)
-            n_g = len(sub)
-            X = sub[xcols].to_numpy(dtype=np.float64)
-            y = sub[ycol].to_numpy(dtype=np.float64)
-            w = sub[wcol].to_numpy(dtype=np.float64) if wcol else np.ones(n_g)
-            rid = sub[id_col].to_numpy(dtype=np.int64).astype(np.uint64)
-            # per-row product features, weighted later by count*w
-            P = np.empty((n_g, L), dtype=np.float64)
-            c0 = 0
-            for (i, j) in tri:
-                P[:, c0] = X[:, i] * X[:, j]
-                c0 += 1
-            P[:, c0: c0 + k] = X
-            c0 += k
-            P[:, c0: c0 + k] = X * y[:, None]
-            c0 += k
-            P[:, c0] = y * y
-            P[:, c0 + 1] = y
-            P[:, c0 + 2] = 1.0
-            G = np.empty((L, B), dtype=np.float64)
-            ncnt = np.empty(B, dtype=np.float64)
-            if include_identity:
-                g_id = P.T @ w
-                rows_out.append((-1, gval, np.append(g_id, float(n_g)).tolist()))
+        return fast_bootstrap_kernel(
+            iterator, xcols, ycol, group, id_col, wcol,
+            reps=reps, seed=seed, rep_block=rep_block,
+            include_identity=include_identity, use_exact=use_exact,
+        )
+
+    return reduce_fast_stats(proj.mapInPandas(compute, schema=out_schema).toPandas(), xcols)
+
+
+def bootstrap_group_stats_local(
+    pdf,
+    xcols: list[str],
+    ycol: str,
+    group: str,
+    reps: int,
+    seed: int,
+    wcol: str | None = None,
+    id_col: str = "__ob_row_id__",
+    include_identity: bool = False,
+) -> dict[int, dict[object, GroupStats]]:
+    """In-process twin of ``bootstrap_group_stats_fast(method='poisson')``:
+    the same kernel run on one pandas frame, so both resample with the
+    identical splitmix64 stream keyed by ``id_col``. Group keys keep the
+    frame's own values (the Spark path returns them as strings)."""
+    parts = fast_bootstrap_kernel(
+        iter([pdf]), xcols, ycol, group, id_col, wcol,
+        reps=reps, seed=seed, include_identity=include_identity,
+    )
+    return reduce_fast_stats(next(parts), xcols)
+
+
+def fast_bootstrap_kernel(
+    iterator,
+    xcols: list[str],
+    ycol: str,
+    group: str,
+    id_col: str,
+    wcol: str | None,
+    *,
+    reps: int,
+    seed: int,
+    rep_block: int = 128,
+    include_identity: bool = False,
+    use_exact: bool = False,
+):
+    """Per-partition bootstrap GEMM: yields one (rep, grp, stats) frame of
+    every group's stat vectors for each replicate (plus rep = -1 with unit
+    counts when ``include_identity``). The body of the ``mapInPandas`` pass
+    and of the in-process path."""
+    import numpy as np
+    import pandas as pd
+
+    k = len(xcols)
+    tri = [(i, j) for i in range(k) for j in range(i, k)]
+    L = len(tri) + 2 * k + 3  # xx, xsum, xy, yty, ysum, wsum
+    B = reps
+    by_group: dict = {}
+    for pdf in iterator:
+        for gval, sub in pdf.groupby(group, sort=False):
+            by_group.setdefault(gval, []).append(sub)
+    rows_out = []
+    for gval, parts in by_group.items():
+        sub = pd.concat(parts, ignore_index=True)
+        n_g = len(sub)
+        X = sub[xcols].to_numpy(dtype=np.float64)
+        y = sub[ycol].to_numpy(dtype=np.float64)
+        w = sub[wcol].to_numpy(dtype=np.float64) if wcol else np.ones(n_g)
+        rid = sub[id_col].to_numpy(dtype=np.int64).astype(np.uint64)
+        # per-row product features, weighted later by count*w
+        P = np.empty((n_g, L), dtype=np.float64)
+        c0 = 0
+        for (i, j) in tri:
+            P[:, c0] = X[:, i] * X[:, j]
+            c0 += 1
+        P[:, c0: c0 + k] = X
+        c0 += k
+        P[:, c0: c0 + k] = X * y[:, None]
+        c0 += k
+        P[:, c0] = y * y
+        P[:, c0 + 1] = y
+        P[:, c0 + 2] = 1.0
+        G = np.empty((L, B), dtype=np.float64)
+        ncnt = np.empty(B, dtype=np.float64)
+        if include_identity:
+            g_id = P.T @ w
+            rows_out.append((-1, gval, np.append(g_id, float(n_g)).tolist()))
+        if use_exact:
+            # flatten this partition's per-row (rep, count) arrays once
+            lens = np.array(
+                [0 if a is None else len(a) for a in sub["__rl"]], dtype=np.int64
+            )
+            row_flat = np.repeat(np.arange(n_g), lens)
+            nz = [np.asarray(a, dtype=np.int64) for a in sub["__rl"] if a is not None and len(a)]
+            rep_flat = np.concatenate(nz) if nz else np.empty(0, dtype=np.int64)
+            cz = [np.asarray(a, dtype=np.float64) for a in sub["__cl"] if a is not None and len(a)]
+            cnt_flat = np.concatenate(cz) if cz else np.empty(0, dtype=np.float64)
+        for b0 in range(0, B, rep_block):
+            b1 = min(b0 + rep_block, B)
+            nb = b1 - b0
             if use_exact:
-                # flatten this partition's per-row (rep, count) arrays once
-                lens = np.array(
-                    [0 if a is None else len(a) for a in sub["__rl"]], dtype=np.int64
-                )
-                row_flat = np.repeat(np.arange(n_g), lens)
-                nz = [np.asarray(a, dtype=np.int64) for a in sub["__rl"] if a is not None and len(a)]
-                rep_flat = np.concatenate(nz) if nz else np.empty(0, dtype=np.int64)
-                cz = [np.asarray(a, dtype=np.float64) for a in sub["__cl"] if a is not None and len(a)]
-                cnt_flat = np.concatenate(cz) if cz else np.empty(0, dtype=np.float64)
-            for b0 in range(0, B, rep_block):
-                b1 = min(b0 + rep_block, B)
-                nb = b1 - b0
-                if use_exact:
-                    C = np.zeros((n_g, nb), dtype=np.float64)
-                    m = (rep_flat >= b0) & (rep_flat < b1)
-                    C[row_flat[m], rep_flat[m] - b0] = cnt_flat[m]
-                else:
-                    C = poisson_counts_np(rid, np.arange(b0, b1), seed)
-                ncnt[b0:b1] = C.sum(axis=0)
-                G[:, b0:b1] = P.T @ (C * w[:, None])
-            for b in range(B):
-                rows_out.append((b, gval, np.append(G[:, b], ncnt[b]).tolist()))
-        yield pd.DataFrame(rows_out, columns=["rep", "grp", "stats"])
+                C = np.zeros((n_g, nb), dtype=np.float64)
+                m = (rep_flat >= b0) & (rep_flat < b1)
+                C[row_flat[m], rep_flat[m] - b0] = cnt_flat[m]
+            else:
+                C = poisson_counts_np(rid, np.arange(b0, b1), seed)
+            ncnt[b0:b1] = C.sum(axis=0)
+            G[:, b0:b1] = P.T @ (C * w[:, None])
+        for b in range(B):
+            rows_out.append((b, gval, np.append(G[:, b], ncnt[b]).tolist()))
+    yield pd.DataFrame(rows_out, columns=["rep", "grp", "stats"])
 
-    pdf_all = proj.mapInPandas(compute, schema=out_schema).toPandas()
 
-    # driver reduce: element-wise sum of partial stat vectors per (rep, group)
-    acc: dict[tuple[int, str], np.ndarray] = {}
+def reduce_fast_stats(pdf_all, xcols: list[str]) -> dict[int, dict[object, GroupStats]]:
+    """Driver reduce of ``fast_bootstrap_kernel`` output: element-wise sum
+    of the partial stat vectors per (rep, group), unpacked to GroupStats."""
+    import numpy as np
+
+    acc: dict[tuple[int, object], np.ndarray] = {}
     for rep, gval, stats in zip(pdf_all["rep"], pdf_all["grp"], pdf_all["stats"]):
         key = (int(rep), gval)
         arr = np.asarray(stats, dtype=np.float64)
@@ -371,8 +424,10 @@ def bootstrap_group_stats_fast(
         else:
             acc[key] = arr.copy()
 
-    out: dict[int, dict[str, GroupStats]] = {}
+    k = len(xcols)
+    tri = [(i, j) for i in range(k) for j in range(i, k)]
     ntri = len(tri)
+    out: dict[int, dict[object, GroupStats]] = {}
     for (rep, gval), v in acc.items():
         xtx = np.zeros((k, k))
         for idx, (i, j) in enumerate(tri):

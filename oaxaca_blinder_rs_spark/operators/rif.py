@@ -135,6 +135,21 @@ def rif_expr_from_params(params: dict, ycol: str, group: str, quantile: float):
     return expr
 
 
+def rif_values_from_params(params: dict, y, g, quantile: float):
+    """NumPy twin of ``rif_expr_from_params`` over outcome array ``y`` and
+    group array ``g``; rows of groups without parameters get NaN."""
+    import numpy as np
+
+    out = np.full(len(y), np.nan)
+    for gval, p in params.items():
+        m = g == gval
+        if p.get("density") is None:
+            out[m] = y[m]
+        else:
+            out[m] = p["q"] + (float(quantile) - (y[m] <= p["q"]).astype(np.float64)) / p["density"]
+    return out
+
+
 def rif_transform(
     df: DataFrame, ycol: str, group: str, quantile: float, engine: str = "expr"
 ) -> DataFrame:

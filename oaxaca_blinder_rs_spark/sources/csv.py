@@ -3,8 +3,13 @@
 - read_csv: header-ful CSV path -> DataFrame with inferred schema
   (main.rs:162-165 LazyCsvReader semantics) plus a stable __ob_row_id__
   reflecting input order (SURVEY §7.5 risk 1).
-- read_csv_bytes: in-memory CSV text/bytes -> DataFrame
-  (engine/src/analysis.rs:10-11 Cursor reader) — pandas->Arrow->Spark.
+- parse_csv_bytes: in-memory CSV text/bytes -> pandas frame
+  (engine/src/analysis.rs:10-11 Cursor reader) plus the same __ob_row_id__.
+  Request-sized inputs stay in this form: the engine entry points
+  (OaxacaBuilder.run / decompose_quantile and operators/engine_ops) run a
+  pandas frame in-process with NumPy and start no Spark job.
+- read_csv_bytes: the same parse handed to Spark (pandas->Arrow->Spark),
+  for callers that want a Spark DataFrame.
 - strict_numeric_cast re-exported from engine_ops (S3).
 """
 
@@ -17,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..operators.engine_ops import strict_numeric_cast  # noqa: F401
 
-__all__ = ["read_csv", "read_csv_bytes", "attach_row_ids", "strict_numeric_cast"]
+__all__ = ["read_csv", "parse_csv_bytes", "read_csv_bytes", "attach_row_ids", "strict_numeric_cast"]
 
 ROW_ID = "__ob_row_id__"
 
@@ -61,14 +66,17 @@ def read_csv(spark: SparkSession, path: str, with_row_id: bool = True) -> DataFr
     return df
 
 
-def read_csv_bytes(spark: SparkSession, data: bytes | str, with_row_id: bool = True) -> DataFrame:
+def parse_csv_bytes(data: bytes | str, with_row_id: bool = True):
+    """Header-ful CSV text/bytes -> pandas frame; ``__ob_row_id__`` is the
+    0-based input row position."""
     import pandas as pd
 
-    if isinstance(data, bytes):
-        buf = io.BytesIO(data)
-    else:
-        buf = io.StringIO(data)
+    buf = io.BytesIO(data) if isinstance(data, bytes) else io.StringIO(data)
     pdf = pd.read_csv(buf)
     if with_row_id:
         pdf[ROW_ID] = range(len(pdf))
-    return spark.createDataFrame(pdf)
+    return pdf
+
+
+def read_csv_bytes(spark: SparkSession, data: bytes | str, with_row_id: bool = True) -> DataFrame:
+    return spark.createDataFrame(parse_csv_bytes(data, with_row_id))
